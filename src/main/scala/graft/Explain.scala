@@ -1,23 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan and wall time of one
   * registered query. Usage: Explain <queryName> <sfDir> [reps]
   * (reps > 1 separates codegen/JIT warmup from steady-state execution).
+  * Runs in Bench's session configuration (`SPARK_GRAFT_CPUS`).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val reps = if (args.length > 2) args(2).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = Sessions.builder(Sessions.envCpus).getOrCreate()
     val df = SparkEntry.queries(name)(spark, dir)
     df.explain("formatted")
     (1 to reps).foreach { r =>

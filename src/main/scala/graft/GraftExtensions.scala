@@ -7,28 +7,37 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.types.Decimal
 
 import graft.functions.{ArrayMath, DDSketchAgg, StringSim}
+import graft.plans.{TopKPerGroupStrategy, TopKRewrite}
 
-/** SQL-surface registration for the engine's custom expressions, two ways:
+/** The engine's session extensions, two ways:
   *
-  *  1. `GraftFunctions.register(spark)` — imperative, works on any live
-  *     session; used by the mains and tests.
+  *  1. imperative, on any live session: `GraftFunctions.register(spark)`
+  *     for the SQL functions, [[TopKRewrite.install]] for the planner
+  *     parts; used by the mains and tests.
   *  2. `spark.sql.extensions=graft.GraftExtensions` — the
   *     [[SparkSessionExtensions]] injection point for sessions created by
   *     infra that owns the builder (spark-submit, Thrift server).
   *
-  * After either, SQL users get `graft_dot(a, b)` (native codegen dot
+  * SQL functions: `graft_dot(a, b)` (native codegen dot
   * product, [[ArrayMath.DotProduct]]), `graft_jaro_winkler(a, b)` /
   * `graft_damerau_levenshtein(a, b)` ([[StringSim]], DuckDB-compatible
   * record-linkage metrics), `graft_upper_tri(a)`
   * ([[ArrayMath.UpperTriProducts]], the one-pass covariance kernel), and
   * the aggregate `graft_dd_sketch(v, gamma)` ([[DDSketchAgg]], the
   * mergeable quantile sketch as a SQL aggregate).
+  *
+  * Planner: the [[TopKPerGroupStrategy]] plus the [[TopKRewrite]]
+  * optimizer rule, so both the explicit top-k API and the declarative
+  * `row_number`-filter form plan through the heap exec.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
+  override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.injections.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
+    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
+    ext.injectOptimizerRule(_ => TopKRewrite)
+  }
 }
 
 object GraftFunctions {

@@ -63,8 +63,8 @@ object NativeTopK {
   }
 
   /** Register the strategy on an existing session (idempotent) — also
-    * injectable at session build via `GraftExtensions` for cluster
-    * submission (`spark.sql.extensions=graft.plans.GraftExtensions`).
+    * injectable at session build via [[graft.GraftExtensions]] for cluster
+    * submission (`spark.sql.extensions=graft.GraftExtensions`).
     */
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(TopKPerGroupStrategy))
@@ -95,18 +95,6 @@ object TopKPerGroupStrategy extends SparkStrategy {
       TopKPerGroupExec(t.groupExprs, t.orderExprs, t.k, t.rankAttr,
         planLater(t.child)) :: Nil
     case _ => Nil
-  }
-}
-
-/** Session-extensions entry point for cluster submission: the planner
-  * strategy plus the [[TopKRewrite]] optimizer rule, so both the
-  * explicit API and the declarative `row_number`-filter form plan
-  * through the heap exec.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
-    ext.injectOptimizerRule(_ => TopKRewrite)
   }
 }
 

@@ -134,7 +134,7 @@ object TopKRewrite extends Rule[LogicalPlan] with PredicateHelper {
   /** Install on a live session (idempotent): the rule joins the
     * experimental batch and the strategy must be present for the node to
     * plan. Cluster submission gets both from
-    * `spark.sql.extensions=graft.plans.GraftExtensions`.
+    * `spark.sql.extensions=graft.GraftExtensions`.
     */
   def install(spark: SparkSession): Unit = {
     NativeTopK.install(spark)

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
+import graft.queries.Bases.{dailyMass, dailyMassSql, sourceWordsCte}
 import graft.text.TextAnalysis
 
 /** Round-10 batch 2: corpus mining and paired/group diagnostics — the
@@ -15,16 +16,6 @@ import graft.text.TextAnalysis
   * DuckDB.
   */
 object CorpusMineQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Shared tokenizer CTE (StyleQueries/CurationQueries house form). */
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id, source,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   /** One row per (id, source, word-n-gram occurrence) — the
     * [[graft.dedup.Dedup.shinglesRaw]] construction with the source
@@ -52,17 +43,6 @@ object CorpusMineQueries {
           i -> array_to_string(ws[i:i+${n - 1}], ' '))) AS gram
       FROM w)"""
 
-  /** The q332 house form: exact 4-dp fixed-point daily mass per type. */
-  private val dailyMassSql = """
-    SELECT event_type, CAST(ts AS DATE) AS day,
-      CAST(sum(CAST(floor(value * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS v
-    FROM events GROUP BY 1, 2"""
-
-  private def dailyMass(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("event_type"), to_date(col("ts")).as("day"))
-      .agg(sum(floor(col("value") * 10000 + 0.5).cast("long")).as("v"))
-
   def all: Seq[Q] = Seq(
 
     // Dunning log-likelihood ratio (CL'93) — the corpus-linguistics
@@ -74,7 +54,7 @@ object CorpusMineQueries {
     // totals are a 20-row broadcast, the per-token totals an
     // equi-join on the vocab frame — never all-pairs.
     Q("q385_dunning_llr", Q.sql(s"""
-        $wordsCte,
+        $sourceWordsCte,
         tok AS (
           SELECT source, unnest(ws) AS tk FROM w),
         csw AS (
@@ -167,7 +147,7 @@ object CorpusMineQueries {
     // corpus gram count) — never doc×doc. Per source: docs screened,
     // docs contaminated, gram hit-rate.
     Q("q386_ngram_contamination", Q.sql(s"""
-        $wordsCte,
+        $sourceWordsCte,
         ${gramsSql(8)},
         tr AS (
           SELECT DISTINCT gram FROM g WHERE id % 5 <> 0),
@@ -212,7 +192,7 @@ object CorpusMineQueries {
     // shingle passes, each one hash-agg pair; low distinct-2/3 marks
     // templated sources the way q378's Yule K marks repetitive vocab.
     Q("q387_distinct_n", Q.sql(s"""
-        $wordsCte,
+        $sourceWordsCte,
         g1 AS (
           SELECT id, source, unnest(ws) AS gram FROM w),
         g2 AS (

@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{Hashing, PortableSql}
 import graft.text.TextAnalysis
 
@@ -32,9 +32,6 @@ import graft.text.TextAnalysis
   * aggregations are plain hash-aggs.
   */
 object CycleCapstoneQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val hexBucket =
     s"${PortableSql.hexToLong("md5(CAST(id AS VARCHAR) || 'r3')", 12)} % 1000"
@@ -300,7 +297,7 @@ object CycleCapstoneQueries {
             (col("user_id") % 4).cast("long").as("grp"),
             least(floor(when(col("value") < 0, 0.0).otherwise(col("value"))
               / 100), lit(9L)).cast("long").as("bucket"))
-        val fixture = Tables.load(s, dir, "events")
+        val fixture = T(s, dir, "events")
         fixture.repartition(4, pmod(col("user_id"), lit(4)))
           .write.mode("overwrite").parquet(stage)
         // reference profile from the full fixture — 5 types × ≤10

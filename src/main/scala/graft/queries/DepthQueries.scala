@@ -1,35 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.ops.Relational.dsum
+import graft.queries.Bases.rdiv
 
 /** Round-5 batch 9: time-weighted averages, Pareto concentration,
   * mutual information, Kaplan-Meier survival, and binary block-level
   * dedup — each oracle-checked bit-for-bit against DuckDB.
   */
 object DepthQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Exact half-up integer division floor((a + d/2) / d) for a ≥ 0,
-    * 0 < d < 2^53, in DECIMAL(38,0) arithmetic — engine-portable (the
-    * DuckDB twin is `(a + d // 2) // d` on HUGEINT). Avoids the
-    * engine-divergent big-double `round(x, 6)` trap (q187/q330): sums of
-    * squared integer deviations overflow 2^53, where double rounding is
-    * not exactly representable and engines disagree in the last ULP.
-    * The division here is exact: (a2 - a2 % d) is divisible by d, so the
-    * DECIMAL(38,6) quotient is an integer and the final cast is lossless. */
-  private def rdiv(a: Column, d: Column): Column = {
-    val dd = d.cast("decimal(38,0)")
-    val a2 = (a.cast("decimal(38,0)") +
-      (d.cast("double") / 2).cast("long")).cast("decimal(38,0)")
-    ((a2 - a2 % dd) / dd).cast("decimal(38,0)")
-  }
 
   private val BlockBytes = 64
 

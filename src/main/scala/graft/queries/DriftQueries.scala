@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.graph.CoPurchase
 import graft.ops.Frames.materialize
+import graft.queries.Bases.normSql
 import graft.text.TextAnalysis
 
 /** Round-5 batch 12: distribution-drift statistics (two-sample KS, PSI),
@@ -14,14 +14,6 @@ import graft.text.TextAnalysis
   * reciprocal-rank fusion — each oracle-checked bit-for-bit vs DuckDB.
   */
 object DriftQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** DuckDB expression for [[TextAnalysis.normalizeText]] (same as
-    * TextQueries.normSql — duplicated because that one is query-private).
-    */
-  private val normSql = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
   private val BfsRounds = 4
 

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.{ArrayMath, PortableSql}
+import graft.queries.Bases.Dim
 
 /** Rounds 15–16 widening: LINEAR-TIME multivariate two-sample drift
   * tests over the embedding space — MMD with random Fourier features
@@ -32,8 +32,6 @@ import graft.functions.{ArrayMath, PortableSql}
   * the oracle's left-associative [[PortableSql.dotConst]] chain.
   */
 object EmbeddingDriftQueries {
-
-  private val Dim = 64
 
   /** Feature count D. The MMD estimate's RFF error is O(1/√D) — 8 is a
     * probe-grade panel (a production monitor raises D, cost is linear).
@@ -137,9 +135,6 @@ object EmbeddingDriftQueries {
       PortableSql.round(s"(CASE WHEN nt > n THEN $scaled END)", 6)
         + " AS mmd2_n")
   }
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   def all: Seq[Q] = Seq(
 

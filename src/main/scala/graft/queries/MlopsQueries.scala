@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.ArrayMath
 import graft.multimodal.Multimodal
 import graft.ops.Relational.dsum
+import graft.queries.Bases.Dim
 
 /** Round-5 batch 23: ML-ops depth — one-pass embedding covariance (the
   * PCA/whitening precursor), exponential time-decay scoring, and the
@@ -15,10 +15,6 @@ import graft.ops.Relational.dsum
   */
 object MlopsQueries {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private val Dim = 64
   private val FrameStride = 256
   private val MaxFrames = 8
 

@@ -1,10 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
+import graft.queries.Bases.Dim
 import graft.similarity.{Ivf, Pq, Similarity}
 
 /** North-star similarity-search queries over `embeddings` (64-dim float
@@ -16,13 +16,9 @@ import graft.similarity.{Ivf, Pq, Similarity}
   */
 object SimilarityQueries {
 
-  private val Dim = 64
   private val LshBits = 8
   private val IvfK = 8
   private val RecallBits = 4
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def cosSql(a: String, b: String) =
     s"round(${PortableSql.cosine(a, b, Dim)}, 6)"

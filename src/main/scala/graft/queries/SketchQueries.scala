@@ -1,11 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
+import graft.queries.Bases.HllP
 import graft.similarity.Quantize
 import graft.sketch.{Hll, Quantiles}
 
@@ -15,11 +16,6 @@ import graft.sketch.{Hll, Quantiles}
   * ([[graft.similarity.Quantize]]).
   */
 object SketchQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private val HllP = 6
 
   /** DDSketch gamma for q287: alpha = (γ−1)/(γ+1) ≈ 0.99% relative error. */
   private val DdGamma = 1.02

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
+import graft.queries.Bases.sourceWordsCte
 import graft.text.TextAnalysis
 
 /** Round-9 batch 9: corpus style and keyword mining — RAKE keyword
@@ -12,16 +13,6 @@ import graft.text.TextAnalysis
   * stylometry — each oracle-checked bit-for-bit against DuckDB.
   */
 object StyleQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Shared tokenizer CTE (CurationQueries/InferenceQueries house form). */
-  private val wordsCte = """
-    WITH w AS (
-      SELECT doc_id AS id, source,
-        string_split(lower(regexp_replace(trim(text), '\s+', ' ', 'g')), ' ') AS ws
-      FROM documents)"""
 
   private def toksOf(s: SparkSession, dir: String): DataFrame =
     T(s, dir, "documents")
@@ -51,7 +42,7 @@ object StyleQueries {
     // DECIMAL-summed; identical phrases aggregate across documents and
     // the top-15 is a deterministic (score DESC, phrase) take.
     Q("q377_rake_keywords", Q.sql(s"""
-        $wordsCte,
+        $sourceWordsCte,
         tok AS (
           SELECT id, CAST(t.pos AS BIGINT) AS pos, ws[t.pos] AS tok
           FROM w, LATERAL (SELECT unnest(generate_series(1, len(ws)))
@@ -143,7 +134,7 @@ object StyleQueries {
     // entirely from the frequency-of-frequencies table: every term an
     // exact integer, one final double division.
     Q("q378_yule_k", Q.sql(s"""
-        $wordsCte,
+        $sourceWordsCte,
         w2 AS (
           SELECT w.id, d.lang, w.ws
           FROM w JOIN documents d ON d.doc_id = w.id),
@@ -191,7 +182,7 @@ object StyleQueries {
     // model-sized broadcast frames; output is every source pair ranked
     // most-similar first.
     Q("q379_burrows_delta", Q.sql(s"""
-        $wordsCte,
+        $sourceWordsCte,
         tok AS (
           SELECT source, t.tok FROM (
             SELECT source, unnest(ws) AS tok FROM w) t

@@ -1,12 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Relational.dsum
+import graft.queries.Bases.normSql
 import graft.sketch.Hll
 import graft.text.TextAnalysis
 
@@ -16,11 +16,6 @@ import graft.text.TextAnalysis
   * estimator — each oracle-checked bit-for-bit vs DuckDB.
   */
 object TailQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private val normSql = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
 
   /** HLL precision for the vocab-overlap sketches (2^8 = 256 buckets —
     * ±6.5% standard error, plenty to rank overlaps; the point is the

@@ -1,11 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.Tables.{load => T}
 import graft.functions.PortableSql
 import graft.ops.Sampling
+import graft.queries.Bases.{langScoreSql, normSql}
 import graft.text.TextAnalysis
 
 /** North-star text-analysis queries over `documents`: token counting,
@@ -17,20 +17,6 @@ import graft.text.TextAnalysis
   * replace-length trick so no regex dialect is involved in scoring.
   */
 object TextQueries {
-
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** DuckDB expression for the normalized text form
-    * ([[TextAnalysis.normalizeText]]).
-    */
-  private val normSql = "lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))"
-  private val paddedSql = s"(' ' || $normSql || ' ')"
-
-  private def langScoreSql(lang: String): String =
-    TextAnalysis.LangMarkers.toMap.apply(lang)
-      .map(m => PortableSql.countOccurrences(paddedSql, m))
-      .mkString("(", " + ", ")")
 
   /** CTE chain of the corpus-curation pipeline (q50 / `Corpus.curate`):
     * exact dedup survivors → language + quality scoring → serving filter,

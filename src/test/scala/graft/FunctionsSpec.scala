@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{ExtensionsProbe, SparkSessionExtensions}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Aggregators
@@ -68,9 +68,16 @@ class FunctionsSpec extends SparkSpec {
 
   test("GraftExtensions injects the same functions via the extensions hook") {
     // the injection point itself (sessions created with
-    // spark.sql.extensions=graft.GraftExtensions): apply must register
-    // without error on a fresh extensions container
-    noException should be thrownBy new GraftExtensions()(new SparkSessionExtensions)
+    // spark.sql.extensions=graft.GraftExtensions): the one extension
+    // carries the SQL functions AND the native top-k planner parts
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    ExtensionsProbe.functionNames(ext) should contain theSameElementsAs
+      GraftFunctions.injections.map(_._1)
+    GraftFunctions.injections should have size 5
+    ExtensionsProbe.strategies(ext, spark) shouldBe
+      Seq(plans.TopKPerGroupStrategy)
+    ExtensionsProbe.optimizerRules(ext, spark) shouldBe Seq(plans.TopKRewrite)
   }
 
   test("md5PrefixLong equals the hex/conv chain, codegen and interpreted") {
